@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from basis_spark.session import memo
+
 TABLES = (
     "region",
     "nation",
@@ -28,19 +30,6 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Memoized analyzed DataFrames per (session, sf_dir, table). Fixtures are
-# immutable, so reuse is sound; it saves the per-call parquet footer read
-# + schema analysis (a driver-side Py4J round trip each — the dominant
-# per-action floor for sub-second queries, VERDICT r1). NOT persisted by
-# default: plan tests assert PushedFilters/pruning on the raw parquet
-# scan, and at 100 TB you want the scan, not an InMemoryRelation. Set
-# SPARK_GRAFT_CACHE_FIXTURES=1 (bench.py does) to also persist — one
-# persist per (sf_dir, table), never per call: per-call persists of an
-# identical plan stack nested InMemoryRelations (measured 8.7s -> 54s
-# over 3 calls in round 1).
-_df_cache: dict[tuple[str, str, str], DataFrame] = {}
-_conf_enforced: set[str] = set()
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -62,30 +51,32 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # whatever the host JVM defaults to — a non-UTC session silently shifts
     # every date extraction/trunc (verified: date_parts under
     # America/New_York returns h=19 for UTC midnight). Runtime-settable,
-    # so enforce it at the data boundary — once per session: each
-    # conf.set is a Py4J round trip, and nothing in this repo flips these
-    # confs back (the streaming jobs touch only shuffle.partitions).
-    app_id = spark.sparkContext.applicationId
-    if app_id not in _conf_enforced:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _conf_enforced.add(app_id)
-    # Keyed by applicationId, not id(spark): CPython can reuse a stopped
-    # session's id() for a new one, which would hand back DataFrames
-    # bound to the dead session (ADVICE r2).
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    df = _df_cache.get(key)
-    if df is None:
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-        if name == "events":
-            ts_type = df.schema["ts"].dataType.typeName()
-            if ts_type in ("long", "bigint"):
-                df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-            else:
-                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        if os.environ.get("SPARK_GRAFT_CACHE_FIXTURES"):
-            df = df.persist()
-        _df_cache[key] = df
+    # so enforce it at the data boundary, once per session (each conf.set
+    # is a Py4J round trip; nothing in this repo flips these confs back).
+    memo(spark, os.sep, "session_confs", lambda: _enforce_utc(spark))
+    # Reusing the analyzed scan saves the parquet footer read + schema
+    # analysis, a Py4J round trip per call. Not persisted by default:
+    # plan tests assert pushdown on the raw parquet scan, and at 100 TB
+    # you want the scan, not an InMemoryRelation.
+    # SPARK_GRAFT_CACHE_FIXTURES=1 (bench.py sets it) also persists.
+    return memo(spark, sf_dir, f"table:{name}", lambda: _read_table(spark, sf_dir, name))
+
+
+def _enforce_utc(spark: SparkSession) -> None:
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+
+def _read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    if name == "events":
+        ts_type = df.schema["ts"].dataType.typeName()
+        if ts_type in ("long", "bigint"):
+            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+        else:
+            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if os.environ.get("SPARK_GRAFT_CACHE_FIXTURES"):
+        df = df.persist()
     return df
 
 

@@ -316,16 +316,12 @@ def rollup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from basis_spark.io import scratch_dir
+    from basis_spark.operators.scans import _sf_scratch
 
     ev = load(spark, sf_dir, "events")
-    # applicationId-scoped like every other scratch consumer: an
-    # unscoped path + the rmtree below would delete blocks a concurrent
-    # process is mid-read on (same race class as scans._sf_scratch).
-    base = os.path.join(
-        scratch_dir("rollup_incr"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    # applicationId-scoped: with an unscoped path the rmtree below would
+    # delete blocks a concurrent process is mid-read on.
+    base = _sf_scratch(spark, "rollup_incr", sf_dir)
     shutil.rmtree(base, ignore_errors=True)  # idempotent per call
     n = ev.count()
     per = (n + 2) // 3
@@ -506,14 +502,11 @@ def stream_reactive_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per session, replayed reads after."""
     import os
 
-    from basis_spark.io import scratch_dir
+    from basis_spark.operators.scans import _sf_scratch
     from basis_spark.reactive import Reactor
     from basis_spark.streaming.jobs import _read_stream, split_events_to_chunks
 
-    base = os.path.join(
-        scratch_dir("reactive_bridge"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    base = _sf_scratch(spark, "reactive_bridge", sf_dir)
     r = Reactor(spark, base)
     r.source("raw")
     r.node(

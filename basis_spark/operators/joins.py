@@ -16,14 +16,12 @@ Scale posture:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from basis_spark.io import load
 from basis_spark.registry import register
-from basis_spark.session import pinned_shuffle_partitions
+from basis_spark.session import memo, pinned_shuffle_partitions
 
 
 @register(
@@ -957,31 +955,22 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangles_per_node(e)
 
 
-_edges_cache: dict[tuple[str, str], DataFrame] = {}
-
-
 def proximity_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected u < v edge list of the distance-15 proximity graph
     over the deterministic md5 plane (shared by graph_triangle_count,
     graph_degree_distribution and graph_jaccard_neighbors). Grid-
     bucketed candidate join — each point probes its 3x3 neighbor cells
     — so edge generation is an equi-join on cell, never O(n^2).
-    Memoized per (applicationId, sf_dir) like io.load's _df_cache:
-    three operators call this, and the eager localCheckpoint at the end
-    runs a full Spark job at DataFrame-construction time — without the
-    memo a sweep pays the md5/grid/join computation three times and
-    pins three copies of the checkpoint blocks."""
-    ckey = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    cached = _edges_cache.get(ckey)
-    if cached is not None:
-        return cached
-    edges = (
-        _grid_close_pairs(spark, sf_dir, d_max=15.0)
+    Memoized: the eager localCheckpoint runs a full Spark job at
+    DataFrame-construction time, and several operators share it."""
+    return memo(
+        spark,
+        sf_dir,
+        "proximity_edges",
+        lambda: _grid_close_pairs(spark, sf_dir, d_max=15.0)
         .select("u", "v")
-        .localCheckpoint()  # edges reused by the degree + closing joins
+        .localCheckpoint(),  # edges reused by the degree + closing joins
     )
-    _edges_cache[ckey] = edges
-    return edges
 
 
 @register(

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from basis_spark.io import load, scratch_dir
+from basis_spark.operators.scans import _sf_scratch
 from basis_spark.session import spread_width
 from basis_spark.registry import register
 
@@ -1326,13 +1327,7 @@ def multimodal_tar_shard_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shard routing), which is what makes parallel shard writes safe
     # with no coordination; at fleet scale this is
     # repartition(shard_id) + this generator, the standard recipe.
-    import os
-
-    out_dir = os.path.join(
-        scratch_dir("tar_write"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    out_dir = _sf_scratch(spark, "tar_write", sf_dir)
     docs = (
         load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 120)

@@ -198,15 +198,10 @@ def reactive_propagate(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges them — so the result must equal the one-shot full recompute
     the oracle runs. applicationId-scoped block store: built once per
     session, replayed reads after."""
-    import os
-
-    from basis_spark.io import scratch_dir
+    from basis_spark.operators.scans import _sf_scratch
     from basis_spark.reactive import Reactor
 
-    base = os.path.join(
-        scratch_dir("reactive"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    base = _sf_scratch(spark, "reactive", sf_dir)
     r = Reactor(spark, base)
     r.source("raw")
     r.node(

@@ -10,6 +10,7 @@ partitioned parallel read — no external DB service needed.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -18,6 +19,7 @@ from pyspark.sql import types as T
 
 from basis_spark.io import load, scratch_dir
 from basis_spark.registry import register
+from basis_spark.session import memo
 
 
 @register(
@@ -92,15 +94,17 @@ def source_records(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sf_scratch(spark: SparkSession, subdir: str, sf_dir: str) -> str:
     """applicationId-scoped scratch path for a per-SF derived dataset —
-    the ONE way operators in this module build scratch paths. Always
-    embeds the appId: a shared path + mode('overwrite') lets a
-    concurrent process (pytest alongside a sweep) delete files this
-    session is mid-read on. That race was fixed piecemeal per call site
-    in r4/r5 (ADVICE r3; commits 2bf7d32, 2dcb641) and two helpers were
-    missed — this helper makes the isolation invariant structural."""
+    the ONE way operators build per-SF scratch paths. Always embeds the
+    appId: a shared path + mode('overwrite') lets a concurrent process
+    (pytest alongside a sweep) delete files this session is mid-read
+    on. And a digest of abspath(sf_dir), not just its basename: two
+    fixture dirs named sf0.1 used in one session must not share
+    exists-guarded outputs."""
+    sf_abs = os.path.abspath(sf_dir)
+    digest = hashlib.md5(sf_abs.encode()).hexdigest()[:8]
     return os.path.join(
         scratch_dir(subdir),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
+        f"{os.path.basename(sf_abs)}-{digest}_{spark.sparkContext.applicationId}",
     )
 
 
@@ -140,20 +144,19 @@ def sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return back.select("event_id", "ts", "user_id", "value", "props", "event_type")
 
 
-_dpp_written: set[str] = set()
-
-
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    """events written hive-partitioned by event_type (write-once per
-    process; fixtures are immutable). This is the layout a 100 TB event
+    """events written hive-partitioned by event_type (written once per
+    session; fixtures are immutable). This is the layout a 100 TB event
     lake uses — partition column drives pruning for every reader."""
-    out = _sf_scratch(spark, "events_parted", sf_dir)
-    if out not in _dpp_written:
+
+    def write() -> str:
+        out = _sf_scratch(spark, "events_parted", sf_dir)
         load(spark, sf_dir, "events").write.mode("overwrite").partitionBy(
             "event_type"
         ).parquet(out)
-        _dpp_written.add(out)
-    return out
+        return out
+
+    return memo(spark, sf_dir, "events_parted", write)
 
 
 @register(
@@ -355,9 +358,6 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_filemeta_written: set[str] = set()
-
-
 @register(
     "scan_file_metadata",
     oracle="""
@@ -373,18 +373,20 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     lake — "which files fed this training shard" — with zero extra scan
     cost (the struct is populated from split metadata, not data pages).
 
-    The layout is written once per process with repartition(event_type),
+    The layout is written once per session with repartition(event_type),
     which hash-routes each partition value to exactly one task, so the
     oracle can pin n_files = 1 per partition — and the distinct-count
     would catch a layout regression (e.g. dropping the repartition would
     produce one file per (task, value) pair)."""
-    out = _sf_scratch(spark, "events_filemeta", sf_dir)
-    if out not in _filemeta_written:
+
+    def write() -> str:
+        out = _sf_scratch(spark, "events_filemeta", sf_dir)
         load(spark, sf_dir, "events").repartition("event_type").write.mode(
             "overwrite"
         ).partitionBy("event_type").parquet(out)
-        _filemeta_written.add(out)
-    back = spark.read.parquet(out)
+        return out
+
+    back = spark.read.parquet(memo(spark, sf_dir, "events_filemeta", write))
     return (
         back.select(
             F.regexp_extract(F.col("_metadata.file_path"), r"event_type=([^/]+)/", 1).alias(
@@ -398,9 +400,6 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("file_name").cast("int").alias("n_files"),
         )
     )
-
-
-_compacted_written: set[str] = set()
 
 
 @register(
@@ -426,19 +425,15 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     untouched. At 100 TB the same job runs per partition-dir with the
     target count = dir_bytes / 128 MB, and the repartition shuffle is
     the unavoidable cost of re-clustering."""
-    # applicationId-scoped scratch (like source_jdbc): the process-local
-    # written-guard can't see a concurrent pytest/oracle_sweep process,
-    # which could otherwise overwrite small/big mid-read (ADVICE r3).
-    out = os.path.join(
-        scratch_dir("compact"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
-    small, big = os.path.join(out, "small"), os.path.join(out, "big")
-    if out not in _compacted_written:
-        ev = load(spark, sf_dir, "events")
-        ev.repartition(32).write.mode("overwrite").parquet(small)
+
+    def write() -> tuple[str, str]:
+        out = _sf_scratch(spark, "compact", sf_dir)
+        small, big = os.path.join(out, "small"), os.path.join(out, "big")
+        load(spark, sf_dir, "events").repartition(32).write.mode("overwrite").parquet(small)
         spark.read.parquet(small).repartition(2).write.mode("overwrite").parquet(big)
-        _compacted_written.add(out)
+        return small, big
+
+    small, big = memo(spark, sf_dir, "compacted_events", write)
 
     def stats(path: str, phase: str) -> DataFrame:
         df = spark.read.parquet(path)
@@ -552,10 +547,7 @@ def _schema_evolution_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     event_type column, gen=1 carries it. applicationId-scoped scratch,
     guarded write; shared by scan_schema_evolution_merge and
     schema_drift_report."""
-    out = os.path.join(
-        scratch_dir("schema_evolution"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    out = _sf_scratch(spark, "schema_evolution", sf_dir)
     done = os.path.join(out, "_done")
     if not os.path.exists(done):
         ev = load(spark, sf_dir, "events")
@@ -618,10 +610,7 @@ def incremental_backfill_partition(spark: SparkSession, sf_dir: str) -> DataFram
     dynamic overwrite scopes the commit to the touched partitions, so
     backfill cost tracks the correction, not the table.
     applicationId-scoped scratch, guarded."""
-    out = os.path.join(
-        scratch_dir("backfill"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{spark.sparkContext.applicationId}",
-    )
+    out = _sf_scratch(spark, "backfill", sf_dir)
     done = os.path.join(out, "_done")
     if not os.path.exists(done):
         ev = load(spark, sf_dir, "events").select("event_id", "value", "event_type")
@@ -1101,11 +1090,7 @@ def source_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
     acctbal-cents %+013d. Cents are floor(bal*100) so the roundtrip is
     integer-exact (no double-rounding-mode trap between engines).
     """
-    out = os.path.join(
-        scratch_dir("fixed_width"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{spark.sparkContext.applicationId}",
-    )
+    out = _sf_scratch(spark, "fixed_width", sf_dir)
     if not os.path.exists(out):
         cust = load(spark, sf_dir, "customer").select(
             F.concat(

@@ -12,7 +12,6 @@ is what keeps state-store size proportional to the window, not history.
 
 from __future__ import annotations
 
-import hashlib
 import os
 import shutil
 import time
@@ -33,16 +32,11 @@ def split_events_to_chunks(
     basis-style block/increment. Scratch is applicationId-keyed so
     concurrent sessions never race on the _done guard.
     """
-    # Key = basename + abspath digest + n_chunks + appId: basename alone
-    # would serve /a/sf0.1's chunks for /b/sf0.1, and a later call with
-    # a different n_chunks would silently get the cached layout.
-    apath = os.path.abspath(sf_dir.rstrip("/"))
-    digest = hashlib.md5(apath.encode()).hexdigest()[:8]
-    out = os.path.join(
-        scratch_dir("stream_chunks"),
-        f"{os.path.basename(apath)}_{digest}_c{n_chunks}"
-        f"_{spark.sparkContext.applicationId}",
-    )
+    from basis_spark.operators.scans import _sf_scratch
+
+    # n_chunks in the path: a later call with a different n_chunks must
+    # not get the cached layout.
+    out = _sf_scratch(spark, os.path.join("stream_chunks", f"c{n_chunks}"), sf_dir)
     ev = load(spark, sf_dir, "events")
     if not os.path.exists(os.path.join(out, "_done")):
         n = ev.count()
@@ -85,12 +79,11 @@ def split_events_to_chunks_shuffled(
     maxFilesPerTrigger=1 the micro-batch sequence IS `delivery` — the
     adversarial reordering harness for the watermark tests. Scratch is
     applicationId-keyed (fresh per session, no cross-process clashes)."""
+    from basis_spark.operators.scans import _sf_scratch
+
     src, _ = split_events_to_chunks(spark, sf_dir)
     tag = "-".join(map(str, delivery))
-    out = os.path.join(
-        scratch_dir("stream_chunks_ooo"),
-        f"{os.path.basename(sf_dir.rstrip('/'))}_{tag}_{spark.sparkContext.applicationId}",
-    )
+    out = _sf_scratch(spark, os.path.join("stream_chunks_ooo", tag), sf_dir)
     if not os.path.exists(os.path.join(out, "_done")):
         base = time.time()
         for pos, chunk in enumerate(delivery):
